@@ -19,13 +19,17 @@ into the hash.
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators import aggregate as A
 from .operators import windows as W
+from .published import publish_once
 from .sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -826,13 +830,13 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- ANN recall certification (VERDICT r05 next-round #6): the IVF
-#     candidate generation itself is xxhash64-seeded (no SQL twin), but its
-#     RECALL is oracle-able via the materialize-then-oracle pattern — the
-#     Spark side runs the shipped ivf_topk(k=1) once per (process, sf) and
-#     publishes its answers; the oracle recomputes brute-force top-1 in SQL
-#     and scores the SAME published answers.  Folded into the emb_top1_nn
-#     slot so the full 50-row driver window keeps every prior row. --------
+# --- ANN recall certification: the IVF candidate generation itself is
+#     xxhash64-seeded (no SQL twin), but its RECALL is oracle-able via the
+#     materialize-then-oracle pattern — the Spark side runs the shipped
+#     ivf_topk(k=1) once per sf and publishes its answers; the oracle
+#     recomputes brute-force top-1 in SQL and scores the SAME published
+#     answers.  Folded into the emb_top1_nn slot so the full 50-row driver
+#     window keeps every prior row. -------------------------------------
 
 _ANN_RUN_ROOT = "/tmp/oplog_spark_ann_run"
 # bump when the IVF config under certification changes
@@ -848,41 +852,58 @@ _ANN_VERSION = "v2"
 _ANN_IVF_CONF = dict(k=1, n_centroids=16, nprobe=8, max_bucket=4096)
 
 
-def _ivf_top1_published(spark: SparkSession, sf_dir: str) -> str:
-    """Run the shipped IVF ANN once per (process tree, sf) over the sf_dir
-    embeddings and atomically publish (q_id, ivf_nn_id, ivf_cosine) for
-    q_id < 100 — the _materialized_corpus publish pattern (write to a
-    process-unique tmp dir, os.rename into place, losers read the
-    winner's).  The path is keyed by the sf tag because the answers are a
-    function of the corpus; the oracle SQL statically reads the sf0.01
-    path, the only sf the driver compares at."""
-    import os
-    import shutil
-    import uuid
-
-    from .functions.similarity import ivf_topk
-
+def _ann_top1_published(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    topk_fn: Callable[..., DataFrame],
+    conf: dict,
+    cols: tuple[str, str],
+) -> str:
+    """Run a shipped ANN operator, ``topk_fn(embeddings, **conf)``, once
+    per sf over the sf_dir embeddings and publish (q_id, nn id, cosine) for
+    q_id < 100, the last two named by ``cols``, at
+    ``{prefix}{sf tag}_{_ANN_VERSION}``.  The path is keyed by the sf tag
+    because the answers are a function of the corpus; the oracle SQL
+    statically reads the sf0.01 path, the only sf the driver compares at."""
     tag = os.path.basename(sf_dir.rstrip("/")) or "corpus"
-    out = os.path.join(_ANN_RUN_ROOT, f"{tag}_{_ANN_VERSION}")
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    ivf = (
-        ivf_topk(load_table(spark, sf_dir, "embeddings"), **_ANN_IVF_CONF)
-        .filter(F.col("q_id") < 100)
-        .select(
-            "q_id",
-            F.col("c_id").alias("ivf_nn_id"),
-            F.col("cosine").alias("ivf_cosine"),
-        )
+    nn_col, cos_col = cols
+
+    def build(tmp: str) -> None:
+        topk_fn(load_table(spark, sf_dir, "embeddings"), **conf).filter(
+            F.col("q_id") < 100
+        ).select(
+            "q_id", F.col("c_id").alias(nn_col), F.col("cosine").alias(cos_col)
+        ).write.mode("overwrite").parquet(tmp)
+
+    return publish_once(
+        os.path.join(_ANN_RUN_ROOT, f"{prefix}{tag}_{_ANN_VERSION}"), build
     )
-    os.makedirs(_ANN_RUN_ROOT, exist_ok=True)
-    tmp = os.path.join(_ANN_RUN_ROOT, f".tmp-{os.getpid()}-{uuid.uuid4().hex}")
-    ivf.write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, out)  # atomic publish; fails if a winner exists
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+
+def _ann_recall(
+    spark: SparkSession, sf_dir: str, published: str, fam: str
+) -> DataFrame:
+    """Per query, the brute-force top-1 (nn_id, cosine) beside the
+    ``published`` answer of ANN family ``fam`` ({fam}_nn_id, {fam}_cosine),
+    with {fam}_hit = (the ANN reached the true top-1 cosine).  A query the
+    ANN returned no candidate for scores a miss via the (-1, -2.0)
+    sentinels, like the oracle."""
+    from .functions.similarity import top1_neighbor
+
+    brute = top1_neighbor(load_table(spark, sf_dir, "embeddings"), max_queries=100)
+    nn, cos = f"{fam}_nn_id", f"{fam}_cosine"
+    return brute.join(spark.read.parquet(published), "q_id", "left").select(
+        "q_id",
+        "nn_id",
+        "cosine",
+        F.coalesce(nn, F.lit(-1)).alias(nn),
+        F.coalesce(cos, F.lit(-2.0)).alias(cos),
+        F.when(F.col(cos) >= F.col("cosine"), 1)
+        .otherwise(0)
+        .cast("int")
+        .alias(f"{fam}_hit"),
+    )
 
 
 @_q(
@@ -923,22 +944,12 @@ def emb_top1_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     by query and oracle alike).  A query the IVF returned no candidate for
     scores hit=0 via the (-1, -2.0) sentinels.  The recall floor itself is
     pinned in tests/test_functions.py."""
-    from .functions.similarity import top1_neighbor
+    from .functions.similarity import ivf_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    brute = top1_neighbor(emb, max_queries=100)
-    ivf = spark.read.parquet(_ivf_top1_published(spark, sf_dir))
-    return brute.join(ivf, "q_id", "left").select(
-        "q_id",
-        "nn_id",
-        "cosine",
-        F.coalesce("ivf_nn_id", F.lit(-1)).alias("ivf_nn_id"),
-        F.coalesce("ivf_cosine", F.lit(-2.0)).alias("ivf_cosine"),
-        F.when(F.col("ivf_cosine") >= F.col("cosine"), 1)
-        .otherwise(0)  # NULL (no candidate) scores a miss, like the oracle
-        .cast("int")
-        .alias("ivf_hit"),
+    published = _ann_top1_published(
+        spark, sf_dir, "", ivf_topk, _ANN_IVF_CONF, ("ivf_nn_id", "ivf_cosine")
     )
+    return _ann_recall(spark, sf_dir, published, "ivf")
 
 
 @_q(
@@ -1594,10 +1605,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- materialize-then-oracle queries: the transcript corpus is generated
-#     in-Spark (not a driver table), so each query writes the deterministic
-#     corpus to a fixed parquet path FIRST and the oracle SQL reads the
-#     SAME parquet back with read_parquet() — the driver always runs the
-#     Spark side before the oracle (VERDICT r02 "Next round" #2) ----------
+#     in-Spark (not a driver table), so each query publishes the
+#     deterministic corpus to a fixed parquet path FIRST and the oracle SQL
+#     reads the SAME parquet back with read_parquet() — the driver always
+#     runs the Spark side before the oracle ------------------------------
 
 _CORPUS_ROOT = "/tmp/oplog_spark_oracle_corpus"
 
@@ -1610,44 +1621,20 @@ _CAT_VALUES = ", ".join(
 
 
 def _materialized_corpus(spark: SparkSession, name: str) -> str:
-    """Write the deterministic 300-conversation transcript corpus to a
-    PER-QUERY fixed path and return it.  An existing complete write
-    (_SUCCESS present) is reused — the corpus is bit-reproducible, and
-    skipping the rewrite keeps concurrently-running queries (the
-    parallelized smoke test) from deleting parquet files under each
-    other's lazy readers.  Bump the version suffix if generation
-    semantics ever change.
-
-    Publication is ATOMIC (ADVICE r03): the corpus is written to a
-    process-unique temp directory and os.rename()d into place, so two
-    concurrent first-time runs can't interleave overwrite writes into the
-    shared path — exactly one rename wins, the loser discards its copy and
-    reads the winner's."""
-    import os
-    import shutil
-    import uuid
-
+    """Publish the deterministic 300-conversation transcript corpus once
+    at a PER-QUERY fixed path and return it.  A published corpus is reused
+    — it is bit-reproducible, and skipping the rewrite keeps concurrently
+    running queries (the parallelized smoke test) from deleting parquet
+    files under each other's lazy readers.  Bump the version suffix in
+    ``name`` if generation semantics ever change."""
     from .transcripts import generate_transcripts
 
-    path = os.path.join(_CORPUS_ROOT, name)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    tmp = os.path.join(_CORPUS_ROOT, f".{name}.tmp-{os.getpid()}-{uuid.uuid4().hex}")
-    generate_transcripts(spark, num_conversations=300).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    try:
-        os.rename(tmp, path)  # atomic publish; fails if a winner exists
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            # a stale partial dir (crashed old run, pre-atomic layout)
-            # blocks the rename: replace it once, best-effort
-            shutil.rmtree(path, ignore_errors=True)
-            generate_transcripts(spark, num_conversations=300).write.mode(
-                "overwrite"
-            ).parquet(path)
-    return path
+    return publish_once(
+        os.path.join(_CORPUS_ROOT, name),
+        lambda tmp: generate_transcripts(spark, num_conversations=300)
+        .write.mode("overwrite")
+        .parquet(tmp),
+    )
 
 
 @_q(
@@ -1731,16 +1718,15 @@ def conversation_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("conv_id", F.md5("full_text").alias("text_md5"), "n_turns")
 
 
-# --- streaming-tail certification rows (r5): the reference FLAGSHIP path
+# --- streaming-tail certification rows: the reference FLAGSHIP path
 #     (tail → filter battery → cumulative accumulator / id stats,
 #     TailCommand.java:534-773) driven END-TO-END through Structured
 #     Streaming — two availableNow drains over a growing input dir, the
 #     second resuming from the first's checkpoint (T1/T2/T6/T8) — and
 #     certified against a plain batch-SQL oracle over the SAME corpus:
 #     incremental ≡ batch, hashed row by row by the driver.  The run
-#     executes once per process tree and publishes its reports atomically
-#     (the _materialized_corpus pattern); both rows read the published
-#     parquet. -------------------------------------------------------------
+#     executes once per host and publishes its reports; both rows read the
+#     published parquet. --------------------------------------------------
 
 _TAIL_RUN_ROOT = "/tmp/oplog_spark_tail_run"
 # bump when the corpus, the option battery, or the report layout changes
@@ -1774,65 +1760,66 @@ WITH parsed AS (
 """
 
 
+def _parquet_parts(d: str) -> list[str]:
+    return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def _land(src: str, parts: list[str], input_dir: str, prefix: str) -> None:
+    """Copy the part files ``parts`` of ``src`` into a streaming source's
+    flat input dir as ``{prefix}-{k}.parquet`` — the source watches ONE
+    directory and new files simply appear."""
+    os.makedirs(input_dir, exist_ok=True)
+    for k, f in enumerate(parts):
+        shutil.copy(
+            os.path.join(src, f), os.path.join(input_dir, f"{prefix}-{k}.parquet")
+        )
+
+
 def _tail_published(spark: SparkSession) -> str:
-    """Run the two-drain incremental tail ONCE and atomically publish its
-    cumulative reports; concurrent callers (the parallelized smoke test)
-    race on the rename and the losers read the winner's copy.
+    """Run the two-drain incremental tail once and publish its cumulative
+    reports (``report``, ``id_stats``).
 
     Drain 1 sees the first half of the corpus part files; the rest are
-    then copied into the input dir and a FRESH TailStream over the same
+    then landed in the input dir and a FRESH TailStream over the same
     work_dir drains only the delta (checkpointed source offsets = T2/T8
     resume).  maxFilesPerTrigger=8 splits each drain into micro-batches,
     so the merge-safe partials algebra is exercised across many batches,
-    not one."""
-    import os
-    import shutil
-    import uuid
-
+    not one.  The corpus is published first either way: the oracle reads
+    it."""
     from .streaming.tail import TailStream
 
-    out = os.path.join(_TAIL_RUN_ROOT, _TAIL_VERSION)
-    if os.path.exists(os.path.join(out, "_PUBLISHED")):
-        return out
     corpus = _materialized_corpus(spark, "tail_v1")
-    work = os.path.join(
-        _TAIL_RUN_ROOT, f".tmp-{os.getpid()}-{uuid.uuid4().hex}"
-    )
-    input_dir = os.path.join(work, "input")
-    os.makedirs(input_dir, exist_ok=True)
-    parts = sorted(f for f in os.listdir(corpus) if f.endswith(".parquet"))
-    half = max(1, len(parts) // 2)
 
-    def tail() -> TailStream:
-        return TailStream(
-            spark, input_dir, os.path.join(work, "wd"), **_TAIL_OPTS
+    def build(tmp: str) -> None:
+        work = os.path.join(tmp, "work")
+        input_dir = os.path.join(work, "input")
+
+        def tail() -> TailStream:
+            return TailStream(
+                spark, input_dir, os.path.join(work, "wd"), **_TAIL_OPTS
+            )
+
+        parts = _parquet_parts(corpus)
+        half = max(1, len(parts) // 2)
+        for k, wave in enumerate((parts[:half], parts[half:])):
+            _land(corpus, wave, input_dir, f"wave{k}")
+            tail().run_available()
+
+        t = tail()
+        null_long = F.lit(None).cast("long")
+        report = t.report().withColumn("section", F.lit("all")).unionByName(
+            t.over_threshold_report()
+            .withColumn("gt_80", null_long)
+            .withColumn("gt_100", null_long)
+            .withColumn("section", F.lit("over"))
         )
+        report.write.mode("overwrite").parquet(os.path.join(tmp, "report"))
+        t.id_stats_report().write.mode("overwrite").parquet(
+            os.path.join(tmp, "id_stats")
+        )
+        shutil.rmtree(work)
 
-    for wave in (parts[:half], parts[half:]):
-        for fname in wave:
-            shutil.copy2(os.path.join(corpus, fname), os.path.join(input_dir, fname))
-        tail().run_available()
-
-    t = tail()
-    null_long = F.lit(None).cast("long")
-    report = t.report().withColumn("section", F.lit("all")).unionByName(
-        t.over_threshold_report()
-        .withColumn("gt_80", null_long)
-        .withColumn("gt_100", null_long)
-        .withColumn("section", F.lit("over"))
-    )
-    report.write.mode("overwrite").parquet(os.path.join(work, "out", "report"))
-    t.id_stats_report().write.mode("overwrite").parquet(
-        os.path.join(work, "out", "id_stats")
-    )
-    open(os.path.join(work, "out", "_PUBLISHED"), "w").close()
-    os.makedirs(_TAIL_RUN_ROOT, exist_ok=True)
-    try:
-        os.rename(os.path.join(work, "out"), out)  # atomic publish
-    except OSError:
-        pass  # a concurrent winner published first — use theirs
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    return publish_once(os.path.join(_TAIL_RUN_ROOT, _TAIL_VERSION), build)
 
 
 @_q(
@@ -1861,8 +1848,6 @@ def tail_incremental_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     drains, must equal the oracle's single batch pass over the whole
     corpus (incremental ≡ batch — the same invariant test_streaming.py
     pins, now hashed row-by-row by the driver)."""
-    import os
-
     return spark.read.parquet(os.path.join(_tail_published(spark), "report"))
 
 
@@ -1883,8 +1868,6 @@ def tail_id_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     drains — must equal one batch pass with the independent
     --idStatsThreshold (size ≥ 60) applied on top of the main filter
     battery (the reference's two-threshold system, README.md:412-431)."""
-    import os
-
     return spark.read.parquet(os.path.join(_tail_published(spark), "id_stats"))
 
 
@@ -2690,39 +2673,6 @@ _ANN_LSH_CONF = dict(
 )
 
 
-def _lsh_top1_published(spark: SparkSession, sf_dir: str) -> str:
-    """Run the shipped hyperplane-LSH ANN once per (process tree, sf) and
-    atomically publish (q_id, lsh_nn_id, lsh_cosine) for q_id < 100 — the
-    _ivf_top1_published pattern, separate path per ANN family."""
-    import os
-    import shutil
-    import uuid
-
-    from .functions.similarity import lsh_bucket_topk
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "corpus"
-    out = os.path.join(_ANN_RUN_ROOT, f"lsh_{tag}_{_ANN_VERSION}")
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    lsh = (
-        lsh_bucket_topk(load_table(spark, sf_dir, "embeddings"), **_ANN_LSH_CONF)
-        .filter(F.col("q_id") < 100)
-        .select(
-            "q_id",
-            F.col("c_id").alias("lsh_nn_id"),
-            F.col("cosine").alias("lsh_cosine"),
-        )
-    )
-    os.makedirs(_ANN_RUN_ROOT, exist_ok=True)
-    tmp = os.path.join(_ANN_RUN_ROOT, f".tmp-{os.getpid()}-{uuid.uuid4().hex}")
-    lsh.write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, out)  # atomic publish; fails if a winner exists
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
 @_q(
     "ann_lsh_recall",
     f"""
@@ -2759,22 +2709,13 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PUBLISHED answers are scored by both engines against the SQL
     brute-force oracle — certifying the recall the docstring's levers
     claim (94/100 here vs 47/100 single-table)."""
-    from .functions.similarity import top1_neighbor
+    from .functions.similarity import lsh_bucket_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    brute = top1_neighbor(emb, max_queries=100)
-    lsh = spark.read.parquet(_lsh_top1_published(spark, sf_dir))
-    return brute.join(lsh, "q_id", "left").select(
-        "q_id",
-        "nn_id",
-        "cosine",
-        F.coalesce("lsh_nn_id", F.lit(-1)).alias("lsh_nn_id"),
-        F.coalesce("lsh_cosine", F.lit(-2.0)).alias("lsh_cosine"),
-        F.when(F.col("lsh_cosine") >= F.col("cosine"), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("lsh_hit"),
+    published = _ann_top1_published(
+        spark, sf_dir, "lsh_", lsh_bucket_topk, _ANN_LSH_CONF,
+        ("lsh_nn_id", "lsh_cosine"),
     )
+    return _ann_recall(spark, sf_dir, published, "lsh")
 
 
 @_q(
@@ -2943,85 +2884,52 @@ _DEDUP_STREAM_ROOT = "/tmp/oplog_spark_dedup_stream_run"
 _DEDUP_STREAM_VERSION = "v1"
 
 
-def _dedup_stream_published(spark: SparkSession, sf_dir: str) -> str:
-    """Run the two-drain streaming exact-dedup ONCE per (process tree, sf)
-    and atomically publish its cumulative admission table.
+def _two_drain_report(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    table: str,
+    id_col: str,
+    plant: Callable[[DataFrame], DataFrame],
+    stream: Callable[[str, str], Any],
+    report: Callable[[Any], DataFrame],
+    report_dir: str,
+) -> DataFrame:
+    """Run a two-drain streaming dedup once per sf, publish
+    ``report(stream)`` under ``report_dir`` at ``{name}/{sf tag}``, and
+    read the published report back.
 
     Feed construction (deterministic, id-ordered — the arrival order under
-    which streaming admission provably equals batch min-id dedup):
+    which streaming admission provably equals the batch answer):
 
-      drain 1  the lower-id half of the documents table;
-      drain 2  the upper-id half PLUS a planted duplicate of every
-               doc_id % 3 == 0 document under id + 1_000_000 — so
-               cross-drain duplicate admission (the hash was already
-               admitted in batch 0) is exercised non-vacuously, with
-               checkpointed-offset resume between the drains (a FRESH
-               DedupStream over the same work_dir sees only the delta).
+      drain 1  the lower-id half of ``table``;
+      drain 2  the upper-id half PLUS ``plant(table)``, the caller's
+               planted duplicates — so cross-drain rejection is exercised
+               non-vacuously, with checkpointed-offset resume between the
+               drains (a FRESH ``stream(input_dir, checkpoint_dir)`` over
+               the same dirs sees only the delta).
     """
-    import os
-    import shutil
-    import uuid
-
-    from .streaming.dedup_stream import DedupStream
-
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(_DEDUP_STREAM_ROOT, _DEDUP_STREAM_VERSION, tag)
-    if os.path.exists(os.path.join(out, "_PUBLISHED")):
-        return out
 
-    docs = load_table(spark, sf_dir, "documents")
-    mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2
-    work = os.path.join(
-        _DEDUP_STREAM_ROOT, f".tmp-{os.getpid()}-{uuid.uuid4().hex}"
-    )
-    input_dir = os.path.join(work, "input")
-    stream_dir = os.path.join(work, "stream")
-    os.makedirs(input_dir, exist_ok=True)
+    def build(tmp: str) -> None:
+        work = os.path.join(tmp, "work")
+        input_dir = os.path.join(work, "input")
+        stream_dir = os.path.join(work, "stream")
+        rows = load_table(spark, sf_dir, table)
+        mid = rows.agg(F.max(id_col)).collect()[0][0] // 2
+        upper = rows.filter(F.col(id_col) > mid).unionByName(plant(rows))
+        for k, frame in enumerate((rows.filter(F.col(id_col) <= mid), upper)):
+            stage = os.path.join(work, f"stage{k + 1}")
+            frame.write.mode("overwrite").parquet(stage)
+            _land(stage, _parquet_parts(stage), input_dir, f"half{k + 1}")
+            stream(input_dir, stream_dir).run_available()
+        report(stream(input_dir, stream_dir)).write.mode("overwrite").parquet(
+            os.path.join(tmp, report_dir)
+        )
+        shutil.rmtree(work)
 
-    def _land(frame, stage_name: str, prefix: str) -> None:
-        """Write a feed increment then copy its part files into the flat
-        input dir (the _tail_published landing pattern — the streaming
-        source watches ONE directory and new files simply appear)."""
-        stage = os.path.join(work, stage_name)
-        frame.write.mode("overwrite").parquet(stage)
-        k = 0
-        for f in sorted(os.listdir(stage)):
-            if f.endswith(".parquet"):
-                shutil.copy(
-                    os.path.join(stage, f),
-                    os.path.join(input_dir, f"{prefix}-{k}.parquet"),
-                )
-                k += 1
-
-    _land(docs.filter(F.col("doc_id") <= mid), "stage1", "half1")
-    DedupStream(
-        spark, input_dir, stream_dir, max_files_per_trigger=64
-    ).run_available()
-
-    upper = docs.filter(F.col("doc_id") > mid)
-    planted = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(1_000_000)
-    )
-    _land(upper.unionByName(planted), "stage2", "half2")
-    DedupStream(
-        spark, input_dir, stream_dir, max_files_per_trigger=64
-    ).run_available()
-
-    report_dir = os.path.join(work, "out")
-    DedupStream(
-        spark, input_dir, stream_dir, max_files_per_trigger=64
-    ).admitted().write.mode("overwrite").parquet(
-        os.path.join(report_dir, "admitted")
-    )
-    open(os.path.join(report_dir, "_PUBLISHED"), "w").close()
-
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    try:
-        os.rename(report_dir, out)  # atomic publish
-    except OSError:
-        pass  # a concurrent winner published first — use theirs
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    out = publish_once(os.path.join(_DEDUP_STREAM_ROOT, name, tag), build)
+    return spark.read.parquet(os.path.join(out, report_dir))
 
 
 @_q(
@@ -3047,10 +2955,18 @@ def stream_dedup_admitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     admission table from the equivalent bounded feed; the merge-safe
     partials algebra (first-batch-wins min(struct), summed counts) is what
     is being certified, row by row."""
-    out = _dedup_stream_published(spark, sf_dir)
-    import os
+    from .streaming.dedup_stream import DedupStream
 
-    admitted = spark.read.parquet(os.path.join(out, "admitted"))
+    admitted = _two_drain_report(
+        spark, sf_dir, _DEDUP_STREAM_VERSION, "documents", "doc_id",
+        # every doc_id % 3 == 0 document again under id + 1_000_000
+        plant=lambda docs: docs.filter(F.col("doc_id") % 3 == 0).withColumn(
+            "doc_id", F.col("doc_id") + F.lit(1_000_000)
+        ),
+        stream=lambda i, c: DedupStream(spark, i, c, max_files_per_trigger=64),
+        report=DedupStream.admitted,
+        report_dir="admitted",
+    )
     return admitted.select(
         "text_hash",
         F.col("keep_id").cast("long").alias("keep_id"),
@@ -3455,80 +3371,6 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dsir(docs, docs.filter("lang = 'en'"), hash_fn="xxhash64", k=100)
 
 
-def _neardup_stream_published(spark: SparkSession, sf_dir: str) -> str:
-    """Two-drain streaming NEAR-dup (minhash/LSH admission) over the same
-    deterministic id-ordered feed pattern as :func:`_dedup_stream_published`,
-    with planted near-duplicates: every ``doc_id % 5 == 0`` document
-    reappears in drain 2 under ``id + 1_000_000`` with ``' qq zz'``
-    appended — a high-but-not-exact jaccard clone, so cross-drain
-    signature-estimate rejection is exercised non-vacuously alongside the
-    corpus's natural near-dups."""
-    import os
-    import shutil
-    import uuid
-
-    from .streaming.dedup_stream import NearDupStream
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(_DEDUP_STREAM_ROOT, "neardup-" + _DEDUP_STREAM_VERSION, tag)
-    if os.path.exists(os.path.join(out, "_PUBLISHED")):
-        return out
-
-    docs = load_table(spark, sf_dir, "documents")
-    mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2
-    work = os.path.join(
-        _DEDUP_STREAM_ROOT, f".tmp-nd-{os.getpid()}-{uuid.uuid4().hex}"
-    )
-    input_dir = os.path.join(work, "input")
-    stream_dir = os.path.join(work, "stream")
-    os.makedirs(input_dir, exist_ok=True)
-
-    def _land(frame, stage_name: str, prefix: str) -> None:
-        stage = os.path.join(work, stage_name)
-        frame.write.mode("overwrite").parquet(stage)
-        k = 0
-        for f in sorted(os.listdir(stage)):
-            if f.endswith(".parquet"):
-                shutil.copy(
-                    os.path.join(stage, f),
-                    os.path.join(input_dir, f"{prefix}-{k}.parquet"),
-                )
-                k += 1
-
-    def _stream() -> NearDupStream:
-        return NearDupStream(
-            spark, input_dir, stream_dir,
-            num_hashes=16, bands=4, min_match=12, hash_fn="md5",
-            max_files_per_trigger=64,
-        )
-
-    _land(docs.filter(F.col("doc_id") <= mid), "stage1", "half1")
-    _stream().run_available()
-
-    upper = docs.filter(F.col("doc_id") > mid)
-    planted = docs.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" qq zz")).alias("text"),
-        "lang", "source", "n_chars",
-    )
-    _land(upper.unionByName(planted), "stage2", "half2")
-    _stream().run_available()
-
-    report_dir = os.path.join(work, "out")
-    _stream().verdicts().write.mode("overwrite").parquet(
-        os.path.join(report_dir, "verdicts")
-    )
-    open(os.path.join(report_dir, "_PUBLISHED"), "w").close()
-
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    try:
-        os.rename(report_dir, out)  # atomic publish
-    except OSError:
-        pass  # a concurrent winner published first — use theirs
-    shutil.rmtree(work, ignore_errors=True)
-    return out
-
-
 def _stream_neardup_oracle(num_hashes: int, bands: int, min_match: int) -> str:
     """DuckDB twin of the NearDupStream certification feed: recompute the
     md5 minhash signatures, band buckets, candidate pairs (predecessor =
@@ -3599,86 +3441,40 @@ def stream_neardup_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-principles computation — per doc, the admit/reject verdict.  The
     oracle rebuilds signatures, buckets, candidates and rejects in SQL
     over the equivalent bounded feed."""
-    out = _neardup_stream_published(spark, sf_dir)
-    import os
+    from .streaming.dedup_stream import NearDupStream
 
-    verdicts = spark.read.parquet(os.path.join(out, "verdicts"))
+    verdicts = _two_drain_report(
+        spark, sf_dir, "neardup-" + _DEDUP_STREAM_VERSION, "documents", "doc_id",
+        # every doc_id % 5 == 0 document again under id + 1_000_000 with
+        # ' qq zz' appended: a high-but-not-exact jaccard clone
+        plant=lambda docs: docs.filter(F.col("doc_id") % 5 == 0).select(
+            (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
+            F.concat(F.col("text"), F.lit(" qq zz")).alias("text"),
+            "lang", "source", "n_chars",
+        ),
+        stream=lambda i, c: NearDupStream(
+            spark, i, c,
+            num_hashes=16, bands=4, min_match=12, hash_fn="md5",
+            max_files_per_trigger=64,
+        ),
+        report=NearDupStream.verdicts,
+        report_dir="verdicts",
+    )
     return verdicts.select(
         F.col("id").cast("long").alias("doc_id"), "admitted"
     )
 
 
-def _embdedup_stream_published(spark: SparkSession, sf_dir: str) -> str:
-    """Two-drain streaming EMBEDDING near-dup over an id-ordered feed:
-    drain 1 = the lower-id half of the embeddings table, drain 2 = the
-    upper half plus planted exact-direction clones (every ``vec_id % 7 ==
-    0`` vector reappears under ``id + 1_000_000`` scaled by 1.25 — cosine
-    exactly 1 with its source, so cross-drain rejection is non-vacuous)."""
-    import os
-    import shutil
-    import uuid
-
-    from .streaming.dedup_stream import EmbNearDupStream
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(_DEDUP_STREAM_ROOT, "embdedup-" + _DEDUP_STREAM_VERSION, tag)
-    if os.path.exists(os.path.join(out, "_PUBLISHED")):
-        return out
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    mid = emb.agg(F.max("vec_id")).collect()[0][0] // 2
-    work = os.path.join(
-        _DEDUP_STREAM_ROOT, f".tmp-emb-{os.getpid()}-{uuid.uuid4().hex}"
-    )
-    input_dir = os.path.join(work, "input")
-    stream_dir = os.path.join(work, "stream")
-    os.makedirs(input_dir, exist_ok=True)
-
-    def _land(frame, stage_name: str, prefix: str) -> None:
-        stage = os.path.join(work, stage_name)
-        frame.write.mode("overwrite").parquet(stage)
-        k = 0
-        for f in sorted(os.listdir(stage)):
-            if f.endswith(".parquet"):
-                shutil.copy(
-                    os.path.join(stage, f),
-                    os.path.join(input_dir, f"{prefix}-{k}.parquet"),
-                )
-                k += 1
-
-    def _stream() -> EmbNearDupStream:
-        return EmbNearDupStream(
-            spark, input_dir, stream_dir,
-            threshold=0.9, n_planes=12, n_tables=2, multiprobe=True,
-            dim=64, seed=42, max_files_per_trigger=64,
-        )
-
-    _land(emb.filter(F.col("vec_id") <= mid), "stage1", "half1")
-    _stream().run_available()
-
-    upper = emb.filter(F.col("vec_id") > mid)
-    planted = emb.filter(F.col("vec_id") % 7 == 0).select(
+def _emb_clones(emb: DataFrame) -> DataFrame:
+    """Planted exact-direction clones: every ``vec_id % 7 == 0`` vector
+    again under ``id + 1_000_000`` scaled by 1.25 — cosine exactly 1 with
+    its source."""
+    return emb.filter(F.col("vec_id") % 7 == 0).select(
         (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
         F.transform("embedding", lambda x: (x * F.lit(1.25)).cast("float"))
         .alias("embedding"),
         "label",
     )
-    _land(upper.unionByName(planted), "stage2", "half2")
-    _stream().run_available()
-
-    report_dir = os.path.join(work, "out")
-    _stream().verdicts().write.mode("overwrite").parquet(
-        os.path.join(report_dir, "verdicts")
-    )
-    open(os.path.join(report_dir, "_PUBLISHED"), "w").close()
-
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    try:
-        os.rename(report_dir, out)  # atomic publish
-    except OSError:
-        pass
-    shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 @_q(
@@ -3713,23 +3509,23 @@ def stream_embdedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact verification ⇒ zero false positives — must be all true);
     ``admitted AND brute_reject`` rows are LSH misses, visible and
     counted, the documented recall trade."""
-    import os
-
-    out = _embdedup_stream_published(spark, sf_dir)
-    verdicts = spark.read.parquet(os.path.join(out, "verdicts")).select(
-        "id", "admitted"
-    )
-
     from .functions.similarity import normalize
+    from .streaming.dedup_stream import EmbNearDupStream
+
+    verdicts = _two_drain_report(
+        spark, sf_dir, "embdedup-" + _DEDUP_STREAM_VERSION, "embeddings", "vec_id",
+        plant=_emb_clones,
+        stream=lambda i, c: EmbNearDupStream(
+            spark, i, c,
+            threshold=0.9, n_planes=12, n_tables=2, multiprobe=True,
+            dim=64, seed=42, max_files_per_trigger=64,
+        ),
+        report=EmbNearDupStream.verdicts,
+        report_dir="verdicts",
+    ).select("id", "admitted")
 
     emb = load_table(spark, sf_dir, "embeddings")
-    planted = emb.filter(F.col("vec_id") % 7 == 0).select(
-        (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
-        F.transform("embedding", lambda x: (x * F.lit(1.25)).cast("float"))
-        .alias("embedding"),
-        "label",
-    )
-    feed = emb.unionByName(planted)
+    feed = emb.unionByName(_emb_clones(emb))
     norm = normalize(feed, "embedding").select(
         F.col("vec_id").alias("id"), "v"
     )

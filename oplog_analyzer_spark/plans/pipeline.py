@@ -157,31 +157,20 @@ class TranscriptPipeline:
         os.replace(tmp, plan_path)  # atomic publish, never rewritten
         self._file_groups_cache = groups
         # stored RELATIVE to work_dir so a moved/renamed work_dir still
-        # resumes (ADVICE r04 — the legacy inline layout was
-        # relocation-safe; the sidecar must be too)
+        # resumes
         state["file_plan"] = "file_plan.json"
         state["file_plan_n_files"] = len(files)
         self._save_checkpoint(state)
 
     def _file_groups(self, state: dict) -> list[list[str]]:
-        """The pinned plan: sidecar-backed (current layout) or inline
-        (pre-r4 checkpoints keep resuming unchanged)."""
-        if "file_groups" in state:  # legacy inline layout
-            return state["file_groups"]
+        """The pinned plan, read once from the work_dir-relative sidecar."""
         if self._file_groups_cache is None:
-            plan = state["file_plan"]
-            if not os.path.isabs(plan):  # current layout: work_dir-relative
-                plan = os.path.join(self.work_dir, plan)
-            elif not os.path.exists(plan):
-                # r4 checkpoints stored the absolute path; if the work_dir
-                # moved, the sidecar moved with it — look beside us
-                plan = os.path.join(self.work_dir, os.path.basename(plan))
-            with open(plan) as f:
+            with open(os.path.join(self.work_dir, state["file_plan"])) as f:
                 self._file_groups_cache = json.load(f)["groups"]
         return self._file_groups_cache
 
     def _batch_df(self, state: dict, b: int) -> DataFrame | None:
-        if "file_groups" in state or "file_plan" in state:
+        if "file_plan" in state:
             group = self._file_groups(state)[b]
             if not group:
                 return None
@@ -219,8 +208,8 @@ class TranscriptPipeline:
         # Refuse silent mode-mixing: a work_dir planned in one batch mode
         # (staged-DataFrame vs file-group) re-run in the other would keep
         # the old completed entries, plan fresh batches, and skip every
-        # one — new input silently never processed (ADVICE r02).  Same
-        # adopt-or-raise posture as the num_batches guard above.
+        # one — new input silently never processed.  Same adopt-or-raise
+        # posture as the num_batches guard above.
         mode = "file_groups" if input_path is not None else "staged"
         prior = state.get("mode")
         if prior is not None and prior != mode:
@@ -233,7 +222,7 @@ class TranscriptPipeline:
             )
         state["mode"] = mode
         if input_path is not None:
-            if "file_groups" not in state and "file_plan" not in state:
+            if "file_plan" not in state:
                 self._plan_file_groups(input_path, state)
         elif not state.get("staged"):
             if transcripts is None:

@@ -158,21 +158,11 @@ def time_range_scan(
     return df
 
 
-def latest_offset(df: DataFrame, ts_col: str) -> DataFrame:
-    """S4 — latest-offset probe (TailCommand.java:1476-1482).
-
-    The reference sorts by $natural desc limit 1 projecting only ts; the
-    aggregate form lets Spark do a partial max per partition — no sort.
-    To ride an existing groupBy (a latest offset per scanned namespace),
-    add :func:`latest_offset_agg` to its agg list instead — a separate
-    function because a column can only be evaluated against the frame its
-    aggregation runs over, so a ``df`` parameter there would be a dead,
-    misleading argument."""
-    return df.agg(latest_offset_agg(ts_col))
-
-
 def latest_offset_agg(ts_col: str) -> F.Column:
-    """The S4 probe as an aggregate COLUMN for an existing groupBy."""
+    """S4 — latest-offset probe (TailCommand.java:1476-1482) as an
+    aggregate column for an existing groupBy.  The reference sorts by
+    $natural desc limit 1 projecting only ts; the aggregate form lets Spark
+    do a partial max per partition — no sort."""
     return F.max(ts_col).alias("latest_ts")
 
 

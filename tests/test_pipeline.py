@@ -253,16 +253,6 @@ def test_pipeline_file_plan_via_hadoop_fs_uri(spark, transcripts, tmp_path):
     assert a == b
 
 
-def test_file_plan_legacy_inline_checkpoint(spark, tmp_path):
-    """Pre-sidecar checkpoints inline the plan as state['file_groups'];
-    they must keep resuming unchanged."""
-    pipe = TranscriptPipeline(
-        spark, str(tmp_path / "wd_l"), T.tool_catalog(spark), num_batches=2
-    )
-    legacy = {"file_groups": [["a.parquet"], ["b.parquet"]]}
-    assert pipe._file_groups(legacy) == [["a.parquet"], ["b.parquet"]]
-
-
 def test_pipeline_resume_adopts_checkpointed_num_batches(spark, transcripts, tmp_path):
     """Resuming with a different --batches must NOT reinterpret batch ids
     under a new modulus (ADVICE: silent dup/drop)."""

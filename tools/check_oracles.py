@@ -38,7 +38,7 @@ def main() -> int:
     import __spark_entry__ as E
     from oplog_analyzer_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
